@@ -26,7 +26,7 @@ ROOT = os.path.dirname(HERE)
 BUILD = os.path.join(ROOT, ".bench_build")
 CLASSPATH = os.path.join(BUILD, "classpath.txt")
 STAMP = os.path.join(BUILD, "classpath.stamp")
-WORKLOADS = ("batch_parse", "batch_enrich", "daemon_kv")
+WORKLOADS = ("batch_parse", "batch_enrich", "daemon_kv", "query_mix")
 RUN_TIMEOUT_S = 170
 BUILD_TIMEOUT_S = 700
 
@@ -97,7 +97,8 @@ def cores():
 
 
 def run_jvm(cp, a, work, record):
-    cmd = ["java", "-Xmx3g", "-XX:+UseG1GC",
+    # a fixed initial heap: no heap resizing between reps
+    cmd = ["java", "-Xms1g", "-Xmx3g", "-XX:+UseG1GC",
            f"-Dlog4j2.configurationFile={os.path.join(HERE, 'log4j2.properties')}",
            f"-Djava.io.tmpdir={os.path.join(work, 'tmp')}",
            "-Dspark.ui.enabled=false"]
@@ -137,13 +138,26 @@ def main():
     shutil.rmtree(work, ignore_errors=True)
     os.makedirs(work)
     record = os.path.join(work, "record.json")
+    if a.workload == "query_mix":
+        sys.dont_write_bytecode = True
+        import mixdata
+        mixdata.write_tables(os.path.join(work, "tables"), a.seed)
     code = run_jvm(cp, a, work, record)
     if not os.path.exists(record):
         log(f"no record written (JVM exit {code})")
         sys.exit(4)
     with open(record) as f:
         rec = json.load(f)
-    # only the record and spans are kept; inputs and sink output are large
+    if a.workload == "query_mix":
+        checks = mixdata.check(os.path.join(work, "tables"), os.path.join(work, "results"),
+                               mixdata.load_oracles(os.path.join(work, "oracles.json")))
+        for q, ok, detail in checks:
+            rec["attempted"] += 1
+            if not ok:
+                rec["failed"] += 1
+                rec["correct"] = False
+            rec.setdefault("notes", []).append(f"oracle {q}: {'ok' if ok else 'FAILED'} {detail}")
+    # only the record and spans are kept; inputs and outputs are large
     for name in os.listdir(work):
         if name not in ("record.json", "spans.jsonl"):
             p = os.path.join(work, name)

@@ -37,13 +37,18 @@ final class Record {
     ok
   }
 
+  private val phases = scala.collection.mutable.ArrayBuffer.empty[String]
+  /** Mark the end of a phase of the run (seconds since JVM start), for the notes. */
+  def phase(name: String): Unit =
+    phases += f"$name ${ManagementFactory.getRuntimeMXBean.getUptime / 1e3}%.1f"
+
   def toJson: String = Json.obj(Seq(
     "correct" -> (failed == 0 && attempted > 0),
     "attempted" -> attempted,
     "failed" -> failed,
     "metrics" -> Json.Obj(metrics.map { case (k, (v, u)) =>
       k -> Json.Obj(Seq("value" -> v, "unit" -> u)) }.toSeq),
-    "notes" -> notes.toSeq))
+    "notes" -> (notes.toSeq :+ phases.mkString("phases (s from JVM start): ", ", ", ""))))
 }
 
 /** Minimal JSON writer for the record and span files. */
@@ -76,11 +81,6 @@ object Json {
 
 object Stats {
   def median(xs: Seq[Double]): Double = quantile(xs, 0.5)
-  /** The 99th percentile when at least ten samples lie beyond it, else
-    * the highest percentile that has ten samples beyond it, else the
-    * median: a tail estimate from too few samples is mostly noise. */
-  def tail(xs: Seq[Double]): Double =
-    if (xs.length < 20) median(xs) else quantile(xs, math.min(0.99, 1 - 10.0 / xs.length))
   /** Linear-interpolated quantile; 0 for an empty sample. */
   def quantile(xs: Seq[Double], q: Double): Double = {
     if (xs.isEmpty) return 0.0
@@ -89,6 +89,16 @@ object Stats {
     val lo = math.floor(pos).toInt
     val hi = math.min(lo + 1, s.length - 1)
     s(lo) + (s(hi) - s(lo)) * (pos - lo)
+  }
+  /** Quantile of values weighted by counts (each value stands for that
+    * many samples); 0 when there are none. */
+  def weightedQuantile(xs: Seq[(Double, Long)], q: Double): Double = {
+    val s = xs.filter(_._2 > 0).sortBy(_._1)
+    val total = s.map(_._2).sum
+    if (total == 0) return 0.0
+    val target = math.max(1L, math.ceil(q * total).toLong)
+    var cum = 0L
+    s.find { case (_, n) => cum += n; cum >= target }.map(_._1).getOrElse(s.last._1)
   }
   def secs(t0: Long): Double = (System.nanoTime() - t0) / 1e9
   def time[A](f: => A): (A, Double) = { val t0 = System.nanoTime(); val a = f; (a, secs(t0)) }
@@ -129,6 +139,13 @@ object Files2 {
       .flatMap(dataFiles)
     else Seq.empty
   def bytes(f: File): Long = dataFiles(f).map(_.length).sum
+  /** Wall clock and file times in epoch milliseconds, with sub-millisecond digits. */
+  def nowMs(): Double = {
+    val t = java.time.Instant.now()
+    t.getEpochSecond * 1e3 + t.getNano / 1e6
+  }
+  def mtimeMs(f: File): Double =
+    Files.getLastModifiedTime(f.toPath).to(java.util.concurrent.TimeUnit.MICROSECONDS) / 1e3
 }
 
 /** Order-independent digest of a multiset of lines: the sum and xor of

@@ -11,33 +11,25 @@ object Etl {
   final case class Ready(spark: SparkSession, p: Project.Loaded, db: KnowDb)
 
   /** The program made ready to run a project: SparkSession,
-    * `Project.load`, `KnowDbLoader.load`, and rule/model compile. Set up
-    * `times` times (stopping the session in between) and report the
-    * median as `setup_s`. The first set-up also counts the JVM's start
-    * up to the benchmark's entry point (input generation excluded). */
-  def setup(rec: Record, a: Args, cores: Int, root: File, times: Int = 3): Ready = {
-    var ready: Ready = null
-    val dts = (1 to times).map { i =>
-      if (ready != null) Session.stop(ready.spark)
-      val (r, dt) = Stats.time {
-        val spark = Session.create(cores, a.work)
-        val p = Project.load(root.getPath)
-        val db = KnowDbLoader.load(p.root)
-        graft.wpl.Runtime.compile(p.wplSource)
-        p.omlSources.foreach(m => OmlText.parse(m._2))
-        Ready(spark, p, db)
-      }
-      ready = r
-      if (i == 1) dt + Main.bootS else dt
+    * `Project.load`, `KnowDbLoader.load`, and rule/model compile, timed
+    * from JVM start (`setup_s`), input generation excluded. */
+  def setup(rec: Record, a: Args, cores: Int, root: File): Ready = {
+    val (ready, dt) = Stats.time {
+      val spark = Session.create(cores, a.work)
+      val p = Project.load(root.getPath)
+      val db = KnowDbLoader.load(p.root)
+      graft.wpl.Runtime.compile(p.wplSource)
+      p.omlSources.foreach(m => OmlText.parse(m._2))
+      Ready(spark, p, db)
     }
-    rec.put("setup_s", Stats.median(dts), "s")
-    rec.notes += dts.map(d => f"$d%.3f").mkString("set-ups (s): ", " ", "")
+    rec.put("setup_s", Main.bootS + dt, "s")
     ready
   }
 
-  /** Per-layer metrics of the spark, project and sinks layers from the
-    * spans of the traced reps, as means per rep. */
-  def sparkLayers(rec: Record, tr: Trace, all: Vector[Span], reps: Seq[Span], cores: Int): Unit = {
+  /** Per-layer metrics of the spark layer, and with `etl` of the project
+    * and sinks layers, from the spans of the traced reps, as means per rep. */
+  def sparkLayers(rec: Record, tr: Trace, all: Vector[Span], reps: Seq[Span], cores: Int,
+                  etl: Boolean = true): Unit = {
     val n = math.max(1, reps.length).toDouble
     def per(kind: String) = reps.map(r => r -> tr.under(all, Set(r.id), kind))
     val actions = per("action")
@@ -57,6 +49,11 @@ object Etl {
     rec.put("spark.shuffle_bytes", sum(stages, "shuffle_bytes") / n, "bytes")
     rec.put("spark.spill_bytes", sum(stages, "spill_bytes") / n, "bytes")
     rec.put("spark.slot_busy_share", if (wallS > 0) taskS / (wallS * cores) else 0.0, "share")
+    rec.put("trace.action_cover", actions.map { case (r, as) =>
+      Stats.unionLength(as.map(x => (x.startMs, x.endMs))) / math.max(1.0, r.durMs) }.sum / n,
+      "share")
+    rec.put("trace.spans", all.length.toDouble, "count")
+    if (!etl) return
     rec.put("project.jobs", jobs.map(_._2.length).sum / n, "count")
     rec.put("project.driver_s", jobs.map { case (r, js) =>
       r.durMs - Stats.unionLength(js.map(j => (j.startMs, j.endMs))) }.sum / 1e3 / n, "s")
@@ -67,10 +64,6 @@ object Etl {
       Stats.unionLength(as.filter(pick).map(x => (x.startMs, x.endMs))) }.sum / 1e3 / n
     rec.put("sinks.write_s", cover(!_.name.startsWith("count at")), "s")
     rec.put("sinks.count_s", cover(_.name.startsWith("count at")), "s")
-    rec.put("trace.action_cover", actions.map { case (r, as) =>
-      Stats.unionLength(as.map(x => (x.startMs, x.endMs))) / math.max(1.0, r.durMs) }.sum / n,
-      "share")
-    rec.put("trace.spans", all.length.toDouble, "count")
   }
 
   /** The traced run's layer measurements outside the reps: single-thread

@@ -15,6 +15,7 @@ object Main {
     try a.workload match {
       case "batch_parse" | "batch_enrich" => Batch.run(a, rec)
       case "daemon_kv" => Daemon.run(a, rec)
+      case "query_mix" => QueryMix.run(a, rec)
       case w => throw new IllegalArgumentException(s"unknown workload $w")
     } catch {
       case e: Throwable =>

@@ -33,7 +33,8 @@ final class Trace(spark: SparkSession) {
       case s: SparkListenerSQLExecutionEnd =>
         Option(execStart.remove(s.executionId)).foreach { case (t0, desc) =>
           val plan = org.apache.spark.sql.PerfbenchSqlBridge.queryExecution(s)
-            .map(_.tracker.phases.map { case (k, v) => s"plan_$k" -> v.durationMs.toDouble })
+            .map(qe => qe.tracker.phases.map { case (k, v) => s"plan_$k" -> v.durationMs.toDouble } ++
+              PlanWalk.counts(qe.executedPlan))
             .getOrElse(Map.empty)
           raw.add(Span(s"x${s.executionId}", "", "action", desc, t0, s.time.toDouble, plan))
         }
@@ -123,7 +124,22 @@ final class Trace(spark: SparkSession) {
   }
 }
 
+/** Counts over an executed plan, adaptive query stages included. */
+object PlanWalk extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
+  import org.apache.spark.sql.execution.SparkPlan
+  import org.apache.spark.sql.execution.exchange.Exchange
+
+  /** `exchanges`: Exchange nodes; `parse_nodes`: operators that evaluate
+    * the WPL parse expression (more than one means each row is parsed
+    * more than once). */
+  def counts(plan: SparkPlan): Map[String, Double] = Map(
+    "exchanges" -> collect(plan) { case e: Exchange => e }.length.toDouble,
+    "parse_nodes" -> collect(plan) {
+      case p if p.expressions.exists(_.exists(_.isInstanceOf[graft.functions.ParseWpl])) => p
+    }.length.toDouble)
+}
+
 object Trace {
   /** Span kinds the workload adds, which own the actions inside them. */
-  val owners = Set("rep", "batch")
+  val owners = Set("rep", "batch", "query")
 }
